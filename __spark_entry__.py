@@ -1764,8 +1764,8 @@ def q_terrain_pipeline(spark, sf_dir):
 
 
 def q_doc_cell_ids(spark, sf_dir):
-    """Quad-cell (H3/S2-style) encode of doc locations (pandas UDF, Morton)."""
-    from geospatialtools_spark.operators.points import with_cell
+    """Quad-cell (H3/S2-style) encode of doc locations (Catalyst Morton)."""
+    from geospatialtools_spark.cellindex import with_cell
     d = _docs_xy(spark, sf_dir)
     return with_cell(d, res=14, out_col="cell_id").select("doc_id", "cell_id")
 

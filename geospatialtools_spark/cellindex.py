@@ -1,14 +1,23 @@
 """Hierarchical quad-cell spatial index (the engine's H3/S2 analog).
 
-Pure numpy — runs vectorized inside Arrow-batched pandas UDFs (no per-row
-Python, per BASELINE.json input_hint). The index is a Morton (Z-order)
-quadtree over a normalized lon/lat square:
+The index is a Morton (Z-order) quadtree over a normalized lon/lat square:
 
     cell_id (int64) = [1 bit guard][res (5 bits)][interleaved x/y bits (2*res)]
 
+Two encoders compute the same bits:
+
+- ``with_cell(df, res, ...)`` is the production encoder: pure Catalyst
+  column arithmetic (floor, clip, the five mask-shift Morton steps), so the
+  encode runs inside whole-stage codegen with no Python worker and no Arrow
+  transfer (BASELINE.json input_hint: no per-row Python). NULL or NaN in
+  either coordinate gives a NULL cell.
+- ``encode(lat, lon, res)`` is the numpy twin: the oracle the tests hold
+  ``with_cell`` to bit-for-bit, and the encoder ``encode_xy``/``cell_to_xy``
+  use inside the kNN ring kernel.
+
 Properties used by the engine:
-- ``encode(lat, lon, res)``: O(1) vectorized encode; equal cells <=> same
-  quad at that resolution, so equi-joins on cell_id are spatial joins.
+- equal cells <=> same quad at that resolution, so equi-joins on cell_id
+  are spatial joins.
 - prefix property: ``parent(cell)`` is a right-shift — Iceberg/parquet
   partitioning by a cell-id prefix gives partition pruning for spatial
   predicates.
@@ -25,6 +34,8 @@ mandated by BASELINE.json north_rule ("H3/S2 index ... from scratch").
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 MAX_RES = 28  # 2^28 cells per axis ≈ 1.5m at the equator — plenty
 
@@ -74,6 +85,67 @@ def encode(lat: np.ndarray, lon: np.ndarray, res: int) -> np.ndarray:
     return encode_xy(x, y, res)
 
 
+# the five (shift, mask) steps of _part1by1, as Catalyst arithmetic
+_SPREAD = ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
+           (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
+           (1, 0x5555555555555555))
+
+
+def _fresh_names(df: DataFrame, *stems: str) -> list[str]:
+    """Temporary column names that collide with no column of ``df``
+    (case-insensitively, as Spark resolves names by default)."""
+    taken = {c.lower() for c in df.columns}
+    out = []
+    for name in stems:
+        while name.lower() in taken:
+            name = "_" + name
+        taken.add(name.lower())
+        out.append(name)
+    return out
+
+
+def with_cell(df: DataFrame, res: int, lat_col: str = "lat",
+              lon_col: str = "lon", out_col: str = "cell") -> DataFrame:
+    """Attach the quad-cell id at resolution ``res`` as ``out_col``.
+
+    Bit-identical to ``encode`` for every finite coordinate whose grid
+    index fits in an int64; out-of-range values clip to the grid edge.
+    NULL or NaN in either coordinate gives a NULL cell.
+
+    Each Morton step references its input twice, so one nested expression
+    would copy the floor/clip subtree 2^5 times per axis. The steps run
+    instead as staged projections over two temporary columns; Catalyst
+    keeps them apart because the shared input is not a cheap expression.
+    """
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    n = 1 << res
+    tx, ty = _fresh_names(df, "_cell_x", "_cell_y")
+    null = F.lit(None).cast("double")
+
+    def grid_index(c: str, offset: float, span: float):
+        v = F.nanvl(F.col(c).cast("double"), null)  # NaN -> NULL
+        return F.floor((v + offset) / span * float(n))
+
+    def clip(c: str):
+        v = F.col(c)
+        return F.when(v < 0, 0).when(v > n - 1, n - 1).otherwise(v)
+
+    def spread(c: str, shift: int, mask: int):
+        v = F.col(c)
+        return v.bitwiseOR(F.shiftleft(v, shift)).bitwiseAND(F.lit(mask))
+
+    df = df.withColumns({tx: grid_index(lon_col, 180.0, 360.0),
+                         ty: grid_index(lat_col, 90.0, 180.0)})
+    df = df.withColumns({tx: clip(tx), ty: clip(ty)})
+    for shift, mask in _SPREAD:
+        df = df.withColumns({c: spread(c, shift, mask) for c in (tx, ty)})
+    head = (1 << 62) | (res << 56)
+    cell = (F.col(tx).bitwiseOR(F.shiftleft(F.col(ty), 1))
+            .bitwiseOR(F.lit(head)))
+    return df.withColumn(out_col, cell).drop(tx, ty)
+
+
 def cell_res(cell: np.ndarray) -> np.ndarray:
     return ((np.asarray(cell).astype(np.uint64) >> np.uint64(56)) & np.uint64(0x1F)).astype(np.int32)
 
@@ -94,16 +166,6 @@ def parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
     if np.any(shift < 0):
         raise ValueError("parent_res must be <= cell res")
     return encode_xy(x >> shift, y >> shift, parent_res)
-
-
-def cell_center(cell: np.ndarray):
-    """(lat, lon) of the cell center."""
-    x, y = cell_to_xy(cell)
-    res = cell_res(cell).astype(np.float64)
-    n = np.power(2.0, res)
-    lon = (x + 0.5) / n * 360.0 - 180.0
-    lat = (y + 0.5) / n * 180.0 - 90.0
-    return lat, lon
 
 
 def kring(cell: np.ndarray, k: int) -> np.ndarray:
@@ -138,17 +200,6 @@ def ring(cell: np.ndarray, k: int) -> np.ndarray:
     nx = x[:, None] + offs[:, 0][None, :]
     ny = y[:, None] + offs[:, 1][None, :]
     return encode_xy(nx, ny, res)
-
-
-def res_for_extent(width_deg: float, target_cells: int = 256) -> int:
-    """Resolution whose cell edge keeps a cover of ``width_deg`` under
-    ~``target_cells`` cells per axis-aligned bbox."""
-    if width_deg <= 0:
-        return MAX_RES
-    per_axis = max(int(np.sqrt(target_cells)), 1)
-    cell_deg = width_deg / per_axis
-    res = int(np.floor(np.log2(360.0 / max(cell_deg, 1e-12))))
-    return int(np.clip(res, 0, MAX_RES))
 
 
 def cover_bbox(min_lat: float, min_lon: float, max_lat: float, max_lon: float,

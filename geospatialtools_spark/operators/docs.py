@@ -5,7 +5,7 @@ documents ``(doc_id, spans: array<struct<kind, text, media_ref, offset>>)``
 carrying a location. These operators attach spatial columns (grid cell,
 quad-cell id, burned tile id, polygon attrs) WITHOUT perturbing the span
 sequence — the per-row invariant (kind, text, media_ref, order) is tested
-byte-for-byte in tests/test_docs.py.
+byte-for-byte in tests/test_pipeline.py.
 
 Skew (north_rule): doc locations are hot-spotted. Joins against the burned
 cell table broadcast the dimension side (no skew exposure); joins against a
@@ -16,31 +16,22 @@ where a hot tile is split by AQE skew-join, plus an optional explicit salt
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as TY
 
-from .. import cellindex
+from ..cellindex import with_cell
 from ..grid import GridMeta
-from .points import with_cell
+from .points import grid_ij
 
 
 def attach_grid_cell(docs: DataFrame, meta: GridMeta, res: int = 20,
                      lat_col="lat", lon_col="lon") -> DataFrame:
-    """Add (i, j) affine grid coordinates + quad-cell id; spans untouched."""
-    iy = (F.col(lat_col) - (meta.miny + meta.resy / 2)) / meta.resy
-    jx = (F.col(lon_col) - (meta.minx + meta.resx / 2)) / meta.resx
-
-    def rint(c):
-        f = F.floor(c)
-        is_half = (c - f) == 0.5
-        even = (f % 2) == 0
-        return F.when(is_half, F.when(even, f).otherwise(f + 1)) \
-                .otherwise(F.floor(c + 0.5)).cast("long")
-
-    out = docs.withColumn("i", rint(iy)).withColumn("j", rint(jx))
+    """Add (i, j) affine grid coordinates + quad-cell id; spans untouched.
+    A NULL/NaN location gives NULL i, j and cell_id."""
+    i, j = grid_ij(meta, lat_col, lon_col)
+    out = docs.withColumn("i", i).withColumn("j", j)
     return with_cell(out, res, lat_col=lat_col, lon_col=lon_col, out_col="cell_id")
 
 

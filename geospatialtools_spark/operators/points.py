@@ -16,8 +16,28 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as TY
 
 from .. import cellindex
+from ..cellindex import with_cell
 from ..geometry import haversine_np
 from ..grid import UNDEF, GridMeta
+
+
+def grid_ij(meta: GridMeta, lat_col="lat", lon_col="lon"):
+    """(i, j) long columns of the nearest grid-cell center, the
+    ``gdal_tools.py:19-20`` affine rule with numpy's half-to-even
+    ``np.round`` (not Spark's half-up). Not clipped to the grid; NULL for a
+    NULL or NaN coordinate, so such a row matches no cell."""
+
+    def rint(c):
+        c = F.nanvl(c, F.lit(None).cast("double"))
+        f = F.floor(c)
+        is_half = (c - f) == 0.5
+        even = (f % 2) == 0
+        return F.when(is_half, F.when(even, f).otherwise(f + 1)) \
+                .otherwise(F.floor(c + 0.5)).cast("long")
+
+    iy = (F.col(lat_col) - (meta.miny + meta.resy / 2)) / meta.resy
+    jx = (F.col(lon_col) - (meta.minx + meta.resx / 2)) / meta.resx
+    return rint(iy), rint(jx)
 
 
 def extract_point_data(points: DataFrame, cells: DataFrame, meta: GridMeta,
@@ -25,23 +45,12 @@ def extract_point_data(points: DataFrame, cells: DataFrame, meta: GridMeta,
                        undef: float = UNDEF) -> DataFrame:
     """gdal_tools.extract_point_data (gdal_tools.py:9-34) as one left join.
 
-    Affine nearest-center rule (:19-20, np.round half-to-even), out-of-bounds
-    -> undef (:29-30). The cell side is keyed on (i, j); Catalyst broadcasts
-    whichever side is small.
+    Affine nearest-center rule (``grid_ij``), out-of-bounds -> undef
+    (:29-30); a NULL/NaN location also reads undef. The cell side is keyed
+    on (i, j); Catalyst broadcasts whichever side is small.
     """
-    iy = (F.col(lat_col) - (meta.miny + meta.resy / 2)) / meta.resy
-    jx = (F.col(lon_col) - (meta.minx + meta.resx / 2)) / meta.resx
-
-    def rint(c):
-        # numpy half-to-even (the reference's np.round, gdal_tools.py:19-20),
-        # not Spark's half-up
-        f = F.floor(c)
-        is_half = (c - f) == 0.5
-        even = (f % 2) == 0
-        return F.when(is_half, F.when(even, f).otherwise(f + 1)) \
-                .otherwise(F.floor(c + 0.5)).cast("long")
-
-    pts = points.withColumn("pi", rint(iy)).withColumn("pj", rint(jx))
+    pi, pj = grid_ij(meta, lat_col, lon_col)
+    pts = points.withColumn("pi", pi).withColumn("pj", pj)
     oob = (F.col("pi") < 0) | (F.col("pi") >= meta.nx) | (F.col("pj") < 0) | (F.col("pj") >= meta.ny)
     joined = pts.join(
         cells.select(F.col("i").alias("pi"), F.col("j").alias("pj"),
@@ -52,18 +61,10 @@ def extract_point_data(points: DataFrame, cells: DataFrame, meta: GridMeta,
     return joined.withColumn("value", value).drop("_v")
 
 
-_CELL_RET = TY.LongType()
-
-
-def with_cell(df: DataFrame, res: int, lat_col="lat", lon_col="lon",
-              out_col: str = "cell") -> DataFrame:
-    """Attach the quad-cell id at resolution ``res`` (vectorized pandas UDF)."""
-
-    @F.pandas_udf(_CELL_RET)
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(cellindex.encode(lat.to_numpy(), lon.to_numpy(), res))
-
-    return df.withColumn(out_col, enc(F.col(lat_col), F.col(lon_col)))
+def _located(df: DataFrame, lat_col: str, lon_col: str) -> DataFrame:
+    """Rows whose lat and lon are both non-NULL and not NaN."""
+    ok = [F.col(c).isNotNull() & ~F.isnan(F.col(c)) for c in (lat_col, lon_col)]
+    return df.filter(ok[0] & ok[1])
 
 
 def knn_join(queries: DataFrame, targets: DataFrame, k: int, res: int,
@@ -83,11 +84,17 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int, res: int,
        bound ceil(d_k / min_cell_extent_m) + 1, and gather the remaining
        rings up to that bound in ONE extra batch. Every cell whose nearest
        point could beat d_k is then examined -> exact.
+
+    A query or target with a NULL/NaN coordinate (a NULL cell) is dropped
+    before the ring kernel: such a query returns no rows, such a target is
+    never a candidate.
     """
-    q = with_cell(queries.select(query_id, lat_col, lon_col), res).select(
+    q = with_cell(_located(queries, lat_col, lon_col)
+                  .select(query_id, lat_col, lon_col), res).select(
         F.col(query_id).alias("qid"), F.col(lat_col).alias("qlat"),
         F.col(lon_col).alias("qlon"), F.col("cell").alias("qcell"))
-    t = with_cell(targets.select(target_id, lat_col, lon_col), res).select(
+    t = with_cell(_located(targets, lat_col, lon_col)
+                  .select(target_id, lat_col, lon_col), res).select(
         F.col(target_id).alias("tid"), F.col(lat_col).alias("tlat"),
         F.col(lon_col).alias("tlon"), F.col("cell").alias("tcell"))
     t = t.localCheckpoint(eager=True)
@@ -207,9 +214,11 @@ def knn_broadcast(queries: DataFrame, targets: DataFrame, k: int,
     numpy haversine only SELECTS a candidate superset (pad guards ulp-level
     numpy-vs-JVM ordering differences); the returned distance/rank come from
     the same Catalyst expression as ``knn_join``, so output is identical to
-    the exact brute-force oracle.
+    the exact brute-force oracle. NULL/NaN-location rows are dropped on both
+    sides, as in ``knn_join``.
     """
-    qpdf = queries.select(query_id, lat_col, lon_col).toPandas()
+    qpdf = _located(queries, lat_col, lon_col) \
+        .select(query_id, lat_col, lon_col).toPandas()
     nq = len(qpdf)
     if nq == 0:
         return queries.sparkSession.createDataFrame(
@@ -218,9 +227,9 @@ def knn_broadcast(queries: DataFrame, targets: DataFrame, k: int,
     qlon = qpdf[lon_col].to_numpy(dtype=np.float64)
     keep = k + pad
 
-    t = targets.select(F.col(target_id).alias("tid"),
-                       F.col(lat_col).alias("tlat"),
-                       F.col(lon_col).alias("tlon"))
+    t = _located(targets, lat_col, lon_col).select(
+        F.col(target_id).alias("tid"), F.col(lat_col).alias("tlat"),
+        F.col(lon_col).alias("tlon"))
     out_schema = TY.StructType([
         TY.StructField("qidx", TY.IntegerType()),
         t.schema["tid"],

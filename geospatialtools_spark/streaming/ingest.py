@@ -233,7 +233,7 @@ def streaming_tile_attach(docs: DataFrame, burned_cells: DataFrame, meta,
     quad-cell id, and burned tile id attached to each arriving doc
     micro-batch; spans untouched (the per-row invariant surface).
 
-    Everything here is stateless per row — the Arrow cell-encode UDF and
+    Everything here is stateless per row — the Catalyst cell encode and
     the broadcast dimension join are exactly the batch operators, so the
     plan is streaming-legal with no watermark/state store, and the batch
     twin (same functions on the same rows) oracles it. ``burned_cells`` is

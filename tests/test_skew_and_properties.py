@@ -167,6 +167,50 @@ def test_knn_ring_equals_broadcast(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_knn_join_skips_null_locations(spark):
+    """A NULL/NaN-location query returns no rows and a NULL/NaN-location
+    target is never a candidate; located rows get the same answer as
+    without them (so no NaN reaches the ring kernel's int cast), from
+    both kNN engines."""
+    import numpy as np
+    import pandas as pd
+
+    from geospatialtools_spark.operators.points import knn_broadcast, knn_join
+
+    rng = np.random.RandomState(5)
+    t = pd.DataFrame({"target_id": np.arange(300),
+                      "lat": rng.uniform(-2, 2, 300),
+                      "lon": rng.uniform(-2, 2, 300)})
+    q = pd.DataFrame({"query_id": np.arange(6),
+                      "lat": rng.uniform(-1.5, 1.5, 6),
+                      "lon": rng.uniform(-1.5, 1.5, 6)})
+    bad_t = pd.DataFrame({"target_id": [1000, 1001, 1002],
+                          "lat": [None, np.nan, 0.0],
+                          "lon": [0.0, 0.0, None]})
+    bad_q = pd.DataFrame({"query_id": [100, 101, 102],
+                          "lat": [None, np.nan, 0.5],
+                          "lon": [0.5, 0.5, np.nan]})
+    schema_t = "target_id long, lat double, lon double"
+    schema_q = "query_id long, lat double, lon double"
+    targets = spark.createDataFrame(pd.concat([t, bad_t]), schema_t)
+    queries = spark.createDataFrame(pd.concat([q, bad_q]), schema_q)
+    got = knn_join(queries, targets, k=4, res=8).toPandas()
+    assert set(got["qid"]) == set(range(6))
+    assert not set(got["tid"]) & {1000, 1001, 1002}
+    assert got["dist"].notna().all()
+    clean = knn_join(spark.createDataFrame(q, schema_q),
+                     spark.createDataFrame(t, schema_t), k=4, res=8).toPandas()
+    key = ["qid", "rank"]
+    got = got.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        got, clean.sort_values(key).reset_index(drop=True))
+    # the broadcast engine (what ``knn`` picks for small query sides)
+    # drops the same rows
+    b = knn_broadcast(queries, targets, k=4).toPandas()
+    pd.testing.assert_frame_equal(
+        got, b.sort_values(key).reset_index(drop=True))
+
+
 # ------------------------------------------------------- sessionization
 
 def _sessions_ref(pairs, gap_s):
