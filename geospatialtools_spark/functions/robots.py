@@ -35,6 +35,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _LINE_SPLIT = "\r\n|\n|\r"
+# a leading UTF-8 byte-order mark; the same pattern reads in Java regex
+# (Spark) and RE2 (DuckDB)
+_BOM = r"^\x{FEFF}"
 
 
 def parse_robots(bodies: DataFrame, host_col: str = "host",
@@ -50,8 +53,9 @@ def parse_robots(bodies: DataFrame, host_col: str = "host",
     zero shuffle. Comment stripping (#...), whitespace trim and
     case-insensitive directive names follow the RFC; empty Disallow
     lines (allow-all idiom) are dropped as rules (they mean "no rule").
+    A leading UTF-8 BOM is stripped, so it cannot hide the first directive.
     """
-    lines = F.split(F.col(body_col), _LINE_SPLIT)
+    lines = F.split(F.regexp_replace(F.col(body_col), _BOM, ""), _LINE_SPLIT)
     # normalize each line to struct(directive, value) — directive ''
     # for non-directive lines
     def norm(ln: Column) -> Column:
@@ -143,7 +147,8 @@ def filter_disallowed(df: DataFrame, rules: DataFrame,
                      .alias("_robots_rules_arr"))
                 .withColumnRenamed("host", "_robots_rhost"))
     ph = F.broadcast(per_host)
-    j = df.join(ph, df[host_col] == ph["_robots_rhost"], "left")           .drop("_robots_rhost")
+    j = (df.join(ph, df[host_col] == ph["_robots_rhost"], "left")
+         .drop("_robots_rhost"))
     v = robots_verdict(F.col(path_col), F.col("_robots_rules_arr"))
     if keep_verdict:
         return j.withColumn("robots_allowed", v).drop("_robots_rules_arr")
@@ -169,7 +174,8 @@ def sql_robots_rules(host_expr: str, body_expr: str,
         WITH ln AS (
           SELECT t.host, t.rid, u.u.ord AS ord,
                  trim(regexp_replace(u.u.line, '#.*$', '')) AS clean
-          FROM (SELECT {host_expr} AS host, {body_expr} AS _b,
+          FROM (SELECT {host_expr} AS host,
+                       regexp_replace({body_expr}, '{_BOM}', '') AS _b,
                        row_number() OVER () AS rid FROM {table}) t,
                unnest(list_transform(range(1, len(t._b) + 1),
                       i -> struct_pack(ord := i,

@@ -2,7 +2,7 @@
 
 Every pipeline stage is a pure function (input tables -> output table). A
 stage COMMIT atomically writes the output as parquet plus a manifest
-(stage name, config fingerprint, row count, wall ms, lineage rows). On
+(stage name, config fingerprint, row count, wall ms, token, partitions). On
 restart, a stage whose manifest matches its fingerprint is SKIPPED and its
 committed output is read back — so a killed job resumes at the last
 committed stage with bit-identical results (stages are deterministic by
@@ -21,8 +21,10 @@ an append-only ``_snapshot_log.jsonl`` and archives the replaced state under
 old snapshot as a NEW logged snapshot, ``expire_snapshots`` is the explicit
 retention knob. See the "snapshot log" section below.
 
-The per-partition lineage table (stage, partition_id, rows, wall_ms) is
-appended under ``<root>/_lineage`` at every commit (plans/lineage.py).
+A commit is ONE Spark job, the parquet write; a resume runs none. The row
+count, the per-partition lineage (stage, partition_id, rows, bytes) written
+under ``<root>/_lineage`` and the schema a stage is read back with all come
+from the written parquet footers (plans/lineage.py).
 """
 
 from __future__ import annotations
@@ -34,10 +36,10 @@ import time
 import uuid
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .lineage import lineage_records
+from .lineage import footer_schema, lineage_records
 
 
 class StageRunner:
@@ -45,7 +47,7 @@ class StageRunner:
         self.spark = spark
         self.root = root
         self.config_fp = json.dumps(run_config or {}, sort_keys=True)
-        os.makedirs(root, exist_ok=True)
+        os.makedirs(os.path.join(root, "_lineage"), exist_ok=True)
         self.metrics: list[dict] = []
 
     def _paths(self, stage: str) -> tuple[str, str, str]:
@@ -60,13 +62,18 @@ class StageRunner:
         with open(p) as f:
             return f.read().strip()
 
+    @staticmethod
+    def _manifest(mf: str) -> dict | None:
+        if not os.path.exists(mf):
+            return None
+        with open(mf) as f:
+            return json.load(f)
+
     def is_committed(self, stage: str) -> bool:
         d, _, mf = self._paths(stage)
-        if not (os.path.exists(mf) and os.path.exists(d)):
-            return False
-        with open(mf) as f:
-            m = json.load(f)
-        if m.get("config_fp") != self.config_fp:
+        m = self._manifest(mf)
+        if m is None or not os.path.exists(d) \
+                or m.get("config_fp") != self.config_fp:
             return False
         # the manifest must name THIS data dir: a commit that crashed after
         # publishing its data but before replacing the manifest leaves an
@@ -81,21 +88,14 @@ class StageRunner:
         d, tmp, mf = self._paths(stage)
         if not force and self.is_committed(stage):
             self.metrics.append({"stage": stage, "resumed": True})
-            return self.spark.read.parquet(d)
+            return self._read(d)
 
         t0 = time.time()
         out = fn()
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        lin_dir = os.path.join(self.root, "_lineage")
+        shutil.rmtree(tmp, ignore_errors=True)
         out.write.mode("overwrite").parquet(tmp)
-        committed = self.spark.read.parquet(tmp)
-        # lineage over the COMMITTED data: measuring the unmaterialized plan
-        # would re-execute the whole stage a second time. The lineage pass
-        # already counts every row per partition, so n_rows comes from its
-        # sum — a separate count() would be a second full scan
-        lin_pdf = lineage_records(committed, stage).toPandas()
-        n_rows = int(lin_pdf["rows"].sum())
+        lineage = lineage_records(tmp, stage)
+        n_rows = sum(lineage.column("rows").to_pylist())
         wall_ms = int((time.time() - t0) * 1000)
 
         # token binds manifest <-> data dir (underscore file: invisible to
@@ -107,8 +107,12 @@ class StageRunner:
         if os.path.exists(d):
             self._archive_current(stage)
         os.rename(tmp, d)
-        self.spark.createDataFrame(lin_pdf).withColumn(
-            "committed_stage", F.lit(stage)).write.mode("append").parquet(lin_dir)
+        # written beside the table, then renamed in: readers never see a
+        # partial lineage file
+        lin_tmp = os.path.join(self.root, f"_lineage.{token}.tmp")
+        pq.write_table(lineage, lin_tmp)
+        os.replace(lin_tmp, os.path.join(self.root, "_lineage",
+                                         f"part-{token}.parquet"))
         # LOG BEFORE MANIFEST (r3 advice): the snapshot log must never lag a
         # published manifest. A crash between the two now leaves a logged
         # snapshot whose manifest never published — the resume re-runs the
@@ -121,7 +125,7 @@ class StageRunner:
         with open(mf + ".tmp", "w") as f:
             json.dump({"stage": stage, "config_fp": self.config_fp,
                        "rows": n_rows, "wall_ms": wall_ms, "token": token,
-                       "partitions": len(lin_pdf)}, f)
+                       "partitions": lineage.num_rows}, f)
         os.replace(mf + ".tmp", mf)
         self.metrics.append({"stage": stage, "resumed": False,
                              "rows": n_rows, "wall_ms": wall_ms})
@@ -130,7 +134,11 @@ class StageRunner:
         # rather than letting them degrade the rest of the run
         from ..session import release_blocks
         release_blocks(self.spark)
-        return self.spark.read.parquet(d)
+        return self._read(d)
+
+    def _read(self, d: str) -> DataFrame:
+        """``spark.read.parquet(d)`` without its schema-inference job."""
+        return self.spark.read.schema(footer_schema(d)).parquet(d)
 
     # ------------------------------------------------------- snapshot log
     # Iceberg-semantics emulation over plain parquet: every commit appends
@@ -189,12 +197,8 @@ class StageRunner:
             #     d under it, keeping every committed state readable.
             # (b) orphaned UNCOMMITTED data (no manifest ever named it):
             #     delete — never overwrite the genuine archive with it.
-            tok = self._data_token(d)
-            mtok = None
-            if os.path.exists(mf):
-                with open(mf) as f:
-                    mtok = json.load(f).get("token")
-            if tok is not None and tok == mtok:
+            tok, m = self._data_token(d), self._manifest(mf)
+            if tok is not None and m is not None and tok == m.get("token"):
                 sid = self._log_snapshot(stage, "recovered_commit", token=tok)
                 hist2 = self._history_dir(stage, sid)
                 os.rename(d, hist2)
@@ -203,21 +207,18 @@ class StageRunner:
                 shutil.rmtree(d)
             return
         os.rename(d, hist)
-        if os.path.exists(mf):
-            # attach the manifest sidecar only if it names this data (in the
-            # logged-but-unpublished crash interim the live manifest still
-            # describes the PREVIOUS snapshot)
-            with open(mf) as f:
-                mtok = json.load(f).get("token")
-            if mtok == self._data_token(hist):
-                shutil.copy(mf, hist + ".manifest.json")
+        # attach the manifest sidecar only if it names this data (in the
+        # logged-but-unpublished crash interim the live manifest still
+        # describes the PREVIOUS snapshot)
+        m = self._manifest(mf)
+        if m is not None and m.get("token") == self._data_token(hist):
+            shutil.copy(mf, hist + ".manifest.json")
 
     def _snapshot_data_dir(self, stage: str, snap_id: int) -> str:
-        entries = [e for e in self.snapshots(stage)
-                   if e["snapshot_id"] == snap_id]
-        if not entries:
+        snaps = self.snapshots(stage)
+        if all(e["snapshot_id"] != snap_id for e in snaps):
             raise KeyError(f"no snapshot {snap_id} for stage {stage!r}")
-        cur = self.snapshots(stage)[-1]["snapshot_id"]
+        cur = snaps[-1]["snapshot_id"]
         hist = self._history_dir(stage, snap_id)
         # prefer the archive even for the current id (r3 advice): in the
         # crashed interim state the live dir may hold orphaned uncommitted
@@ -231,8 +232,7 @@ class StageRunner:
 
     def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
         """Time travel: read the stage's table as of a committed snapshot."""
-        return self.spark.read.parquet(
-            self._snapshot_data_dir(stage, snapshot_id))
+        return self._read(self._snapshot_data_dir(stage, snapshot_id))
 
     def rollback(self, stage: str, snapshot_id: int) -> DataFrame:
         """Promote an earlier snapshot back to current. The rollback is a
@@ -258,7 +258,7 @@ class StageRunner:
             if os.path.exists(src_mf):
                 shutil.copy(src_mf, mf)
         self._log_snapshot(stage, "rollback", rolled_back_to=snapshot_id)
-        return self.spark.read.parquet(d)
+        return self._read(d)
 
     def expire_snapshots(self, stage: str, keep_last: int = 2) -> list[int]:
         """Drop archived data dirs beyond the newest ``keep_last`` snapshots

@@ -1,45 +1,43 @@
-"""Per-partition lineage & metrics records (north_rule requirement).
-
-``lineage_records(df, stage)`` evaluates ``df`` once per partition inside a
-``mapInPandas`` pass and emits one record per physical partition:
-(stage, partition_id, rows, wall_ms, bytes_estimate). The StageRunner
-appends these to ``<root>/_lineage`` at every commit, giving an auditable
-who-processed-what trail per stage per partition — the debugging surface a
-1000-executor run needs when one partition straggles or loses rows.
-"""
+"""Per-partition lineage (north_rule), read on the driver from the footers
+of the ``part-NNNNN-*.parquet`` files Spark wrote: exact committed rows and
+on-disk bytes per partition, and the stored Spark schema. No Spark job
+runs; per-partition timing is the task-metric profiler's job."""
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
+import json
+import os
+import re
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql.types import StructType
 
-_SCHEMA = ("stage string, partition_id int, rows long, wall_ms long, "
-           "bytes_estimate long")
+SCHEMA = pa.schema([("stage", pa.string()), ("partition_id", pa.int32()),
+                    ("rows", pa.int64()), ("bytes", pa.int64())])
+_PART = re.compile(r"^part-(\d+)-.*\.parquet$")
 
 
-def lineage_records(df: DataFrame, stage: str) -> DataFrame:
-    """One row per partition of ``df`` with row count + per-partition wall
-    time. Runs over the partition's Arrow batches (no row-Python)."""
-    tagged = df.withColumn("_pid", F.spark_partition_id())
+def _parts(path: str) -> list[tuple[int, str]]:
+    return sorted((int(m.group(1)), os.path.join(path, m.group(0)))
+                  for m in map(_PART.match, os.listdir(path)) if m)
 
-    def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.time()
-        rows = 0
-        nbytes = 0
-        pid = -1
-        for pdf in batches:
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(deep=False).sum())
-            if len(pdf):
-                pid = int(pdf["_pid"].iloc[0])
-        yield pd.DataFrame([{
-            "stage": stage, "partition_id": pid, "rows": rows,
-            "wall_ms": int((time.time() - t0) * 1000),
-            "bytes_estimate": nbytes,
-        }])
 
-    return tagged.mapInPandas(per_partition, schema=_SCHEMA)
+def lineage_records(path: str, stage: str) -> pa.Table:
+    """One row per written partition of the parquet directory ``path``
+    (a partition's files are summed)."""
+    agg: dict[int, list[int]] = {}
+    for pid, f in _parts(path):
+        r = agg.setdefault(pid, [0, 0])
+        r[0] += pq.read_metadata(f).num_rows
+        r[1] += os.path.getsize(f)
+    return pa.table({"stage": [stage] * len(agg), "partition_id": list(agg),
+                     "rows": [r for r, _ in agg.values()],
+                     "bytes": [b for _, b in agg.values()]}, schema=SCHEMA)
+
+
+def footer_schema(path: str) -> StructType:
+    """The Spark schema in a part file's footer (an empty output has one)."""
+    meta = pq.read_metadata(_parts(path)[0][1]).metadata
+    return StructType.fromJson(json.loads(
+        meta[b"org.apache.spark.sql.parquet.row.metadata"]))

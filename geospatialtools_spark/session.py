@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (the CPU affinity mask, as ``nproc``)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 4
+
+
 def get_spark(
     app_name: str = "geospatialtools_spark",
     cpus: int | None = None,
@@ -21,14 +28,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (else all cores). Shuffle
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS (else ``host_cpus()``). Shuffle
     partitions default to the core count — at cluster scale this would be
     2-3x the total executor cores; AQE coalesces the excess either way.
+    The driver heap is $SPARK_DRIVER_MEMORY, else a quarter of physical RAM,
+    so the JVM spills before it can outgrow the host (a fixed large heap
+    gets OOM-killed on a small box first).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or host_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 4)
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -41,13 +52,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or f"{ram // 4 // 2**20}m")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # iterative operators localCheckpoint per round; without periodic JVM
-        # GC the ContextCleaner never sees the dropped weak refs (24g heap
-        # rarely fills) and dead checkpoint blocks pile up in the unified
+        # GC the ContextCleaner never sees the dropped weak refs (a large
+        # heap rarely fills) and dead checkpoint blocks pile up in the unified
         # memory pool, degrading every later query in a long session
         .config("spark.cleaner.periodicGC.interval", "1min")
     )

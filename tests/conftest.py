@@ -13,7 +13,7 @@ import pytest
 
 from geospatialtools_spark import fixtures
 from geospatialtools_spark.oracle import terrain as T
-from geospatialtools_spark.session import get_spark
+from geospatialtools_spark.session import get_spark, host_cpus
 
 RES = 30.0
 TH = RES * RES * 20  # channel threshold
@@ -22,7 +22,9 @@ BTH = RES * RES * 5  # basin threshold
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, extra_conf={"spark.sql.shuffle.partitions": "8"})
+    # cores from the host; 8 shuffle partitions (and default parallelism)
+    # whatever the core count, so partition-dependent outputs do not move
+    s = get_spark(app_name="tests", cpus=host_cpus(), shuffle_partitions=8)
     yield s
 
 

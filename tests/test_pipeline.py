@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -15,7 +16,7 @@ from geospatialtools_spark import fixtures
 from geospatialtools_spark.operators import media as MD
 from geospatialtools_spark.operators.docs import docs_df, span_fingerprint
 from geospatialtools_spark.plans.checkpointing import StageRunner
-from geospatialtools_spark.plans.lineage import lineage_records
+from geospatialtools_spark.plans.lineage import footer_schema, lineage_records
 from geospatialtools_spark.streaming import ingest as ST
 
 
@@ -215,12 +216,117 @@ def test_real_image_decode_contract(spark):
     assert all(0.0 <= v <= 1.0 for f in out["features"] for v in f)
 
 
-def test_lineage_records(spark):
-    df = spark.range(1000).repartition(4)
-    lin = lineage_records(df, "stage_x").toPandas()
-    assert lin["rows"].sum() == 1000
-    assert (lin["stage"] == "stage_x").all()
-    assert lin["partition_id"].nunique() == len(lin) <= 4
+def test_lineage_records_from_footers(spark, tmp_path):
+    """Footer lineage of a committed 4-partition stage with one planted
+    50x partition: exact rows per partition, summing to the manifest's
+    rows, one record per partition, the planted one the largest."""
+    planted = {0: 20, 1: 20, 2: 1000, 3: 20}
+    rdd = spark.sparkContext.parallelize(range(4), 4).flatMap(
+        lambda p: ((p, i) for i in range(planted[p])))
+    root = str(tmp_path / "lin")
+    r = StageRunner(spark, root)
+    r.run_stage("s", lambda: spark.createDataFrame(rdd, "p int, i long"))
+    lin = lineage_records(os.path.join(root, "s"), "s").to_pandas()
+    assert dict(zip(lin["partition_id"], lin["rows"])) == planted
+    assert lin["partition_id"].is_unique
+    assert lin.loc[lin["rows"].idxmax(), "partition_id"] == 2
+    assert (lin["stage"] == "s").all() and (lin["bytes"] > 0).all()
+    with open(os.path.join(root, "s.manifest.json")) as f:
+        m = json.load(f)
+    assert lin["rows"].sum() == m["rows"] == 1060
+    assert m["partitions"] == 4
+    # the committed lineage table holds the same records
+    stored = spark.read.parquet(os.path.join(root, "_lineage")).toPandas()
+    assert stored.columns.tolist() == ["stage", "partition_id", "rows", "bytes"]
+    pd.testing.assert_frame_equal(
+        stored.sort_values("partition_id").reset_index(drop=True),
+        lin.sort_values("partition_id").reset_index(drop=True),
+        check_dtype=False)
+    # a partition written as several files is one record
+    split = str(tmp_path / "split")
+    spark.createDataFrame(rdd, "p int, i long").write \
+        .option("maxRecordsPerFile", 300).parquet(split)
+    assert len([f for f in os.listdir(split) if f.startswith("part-")]) == 7
+    lin = lineage_records(split, "split").to_pandas()
+    assert dict(zip(lin["partition_id"], lin["rows"])) == planted
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_commit_is_one_job_and_resume_is_none(spark, tmp_path):
+    root = str(tmp_path / "jobs")
+    r = StageRunner(spark, root, {"cfg": 1})
+    a, n = _jobs_run_by(spark, lambda: r.run_stage(
+        "a", lambda: spark.range(0, 1000, 1, 4)))
+    assert n == 1                       # the parquet write, nothing else
+    assert a.count() == 1000
+    # a shuffled stage: AQE runs the shuffle map stage as its own job, so
+    # the commit costs exactly what a bare write of the frame costs
+    frame = lambda: spark.range(1000).repartition(4)  # noqa: E731
+    _, n_bare = _jobs_run_by(spark, lambda: frame().write.parquet(
+        str(tmp_path / "bare")))
+    _, n = _jobs_run_by(spark, lambda: r.run_stage("b", frame))
+    assert n == n_bare
+    # a resume reads the committed footers: no job until the caller acts
+    r2 = StageRunner(spark, root, {"cfg": 1})
+    (a2, b2), n = _jobs_run_by(spark, lambda: (
+        r2.run_stage("a", lambda: 1 / 0), r2.run_stage("b", lambda: 1 / 0)))
+    assert n == 0
+    assert a2.count() == 1000 and b2.count() == 1000
+
+
+def test_empty_stage_commits_one_zero_row_lineage_record(spark, tmp_path):
+    root = str(tmp_path / "empty")
+    r = StageRunner(spark, root)
+    out = r.run_stage("e", lambda: spark.range(100).filter("id < 0")
+                      .withColumn("v", F.lit("x")))
+    d = os.path.join(root, "e")
+    assert out.count() == 0
+    assert out.schema == spark.read.parquet(d).schema
+    lin = spark.read.parquet(os.path.join(root, "_lineage")).toPandas()
+    assert lin[["stage", "rows"]].values.tolist() == [["e", 0]]
+    with open(os.path.join(root, "e.manifest.json")) as f:
+        m = json.load(f)
+    assert (m["rows"], m["partitions"]) == (0, 1)
+
+
+def test_committed_frame_schema_equals_inferred(spark, tmp_path):
+    """The schema run_stage reads its output with (from the parquet footer)
+    is the one spark.read.parquet infers, for nested and exotic types —
+    on commit and on resume."""
+    def stage():
+        return spark.range(0, 40, 1, 3).select(
+            "id",
+            F.array(F.struct(F.col("id").alias("a"),
+                             F.lit("x").alias("b"))).alias("arr"),
+            F.create_map(F.lit("k"), F.col("id")).alias("m"),
+            F.col("id").cast("decimal(10,2)").alias("dec"),
+            F.timestamp_seconds(F.col("id")).alias("ts"),
+            F.lit(None).cast("string").alias("n"))
+
+    root = str(tmp_path / "schema")
+    d = os.path.join(root, "s")
+    got = StageRunner(spark, root).run_stage("s", stage)
+    inferred = spark.read.parquet(d)
+    assert got.schema == inferred.schema
+    assert footer_schema(d).fieldNames() == inferred.schema.fieldNames()
+    resumed = StageRunner(spark, root).run_stage("s", lambda: 1 / 0)
+    assert resumed.schema == inferred.schema
+    pd.testing.assert_frame_equal(
+        got.orderBy("id").toPandas(), inferred.orderBy("id").toPandas())
 
 
 def test_checkpoint_resume(spark, tmp_path):

@@ -15,7 +15,7 @@ def py_rules(body):
     """Reference parser: (rule_path, allow) list for User-agent: *."""
     rules = []
     in_star, in_header_run = False, False
-    for raw in re.split("\r\n|\n|\r", body):
+    for raw in re.split("\r\n|\n|\r", body.removeprefix("\ufeff")):
         line = raw.split("#", 1)[0].strip()
         m = re.match("^([^:]+):(.*)$", line)
         d = m.group(1).strip().lower() if m else ""
@@ -137,6 +137,27 @@ def test_robots_twin_handles_duplicate_host_rows(spark):
     sql_rows = con.sql(R.sql_robots_rules("host", "body",
                                           "robots")).fetchall()
     assert {(h, p, bool(a)) for h, p, a in sql_rows} == got
+
+
+def test_robots_bom_prefixed_body(spark):
+    """A UTF-8 BOM before the first line must not hide its directive: the
+    leading wildcard group's rules still bind, in Spark and in the twin."""
+    rows = [("bom.com", "\ufeffUser-agent: *\nDisallow: /private\n"),
+            ("mid.com", "User-agent: *\n\ufeffDisallow: /x\n")]
+    df = spark.createDataFrame(rows, "host string, body string")
+    got = {(r["host"], r["rule_path"], r["allow"])
+           for r in R.parse_robots(df).collect()}
+    assert got == {("bom.com", "/private", False)}   # only a LEADING BOM
+    assert got == {(h, p, a) for h, b in rows for p, a in py_rules(b)}
+    con = duckdb.connect()
+    con.sql("CREATE TABLE robots(host VARCHAR, body VARCHAR)")
+    con.executemany("INSERT INTO robots VALUES (?, ?)", rows)
+    sql_rows = con.sql(R.sql_robots_rules("host", "body",
+                                          "robots")).fetchall()
+    assert {(h, p, bool(a)) for h, p, a in sql_rows} == got
+    urls = spark.createDataFrame([(0, "bom.com", "/private/a")],
+                                 "id long, host string, path string")
+    assert R.filter_disallowed(urls, R.parse_robots(df)).count() == 0
 
 
 def test_robots_null_path_kept_and_name_collision(spark):
